@@ -199,13 +199,6 @@ def images_from_range(spark: SparkSession, n: int, partitions: int | None = None
     return images_from_ids(ids.withColumnRenamed("id", "i"), partitions=0)
 
 
-def images_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus keyed by o_orderkey — gives the DuckDB oracle the identical
-    deterministic id set without shipping bytes to SQL."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return images_from_ids(orders.select(F.col("o_orderkey").alias("i")))
-
-
 # Generator version — bump when the corpus definition changes so stale
 # materializations are regenerated.
 CORPUS_VERSION = "v3-pcell"
@@ -263,11 +256,6 @@ def _write_corpus(
             ids_p, extra_cols=["pcell"], orientation=orientation, fmt_override=fmt_override
         )
         images.write.mode(mode).parquet(path)
-
-
-def read_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Corpus scan; `pcell` is the partition column (filter it for pruning)."""
-    return spark.read.parquet(path)
 
 
 def materialized_images(spark: SparkSession, sf_dir: str, cache_root: str = "/tmp/spark_graft_corpus") -> str:

@@ -134,10 +134,6 @@ def encode_col(lon: Column, lat: Column, res: int) -> Column:
     )
 
 
-def res_col(cell: Column) -> Column:
-    return F.shiftright(cell, RES_SHIFT)
-
-
 def ix_col(cell: Column) -> Column:
     return cell.bitwiseAND(F.lit(IX_MASK))
 
@@ -217,13 +213,6 @@ def parent_sql(cell_expr: str, parent_res: int, res: int) -> str:
         f" | (({iy_sql(cell_expr)} >> {dr}) << {IY_SHIFT})"
         f" | ({ix_sql(cell_expr)} >> {dr}))"
     )
-
-
-def centroid_sql(cell_expr: str, res: int) -> tuple[str, str]:
-    nx, ny = nx_ny(res)
-    lon = f"(-180.0 + ({ix_sql(cell_expr)} + 0.5) * {360.0 / nx!r})"
-    lat = f"(90.0 - ({iy_sql(cell_expr)} + 0.5) * {180.0 / ny!r})"
-    return lon, lat
 
 
 # ------------------------------------------------- distributed compaction ---

@@ -9,13 +9,8 @@ checkpoint layer (streaming/incremental.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def existing_dates(output: DataFrame, date_col: str = "date") -> DataFrame:
-    """A6: SELECT DISTINCT date ORDER BY date (pipeline.py:171)."""
-    return output.select(F.col(date_col).alias("date")).distinct().orderBy("date")
 
 
 def missing_dates(expected: DataFrame, existing: DataFrame, date_col: str = "date") -> DataFrame:

@@ -65,7 +65,12 @@ class CacheScope:
 
     def release(self) -> None:
         while self._dfs:
-            self._dfs.pop().unpersist()
+            df = self._dfs.pop()
+            # a stopped SparkContext took its cached blocks with it, and
+            # unpersist on its frames fails: drop them instead (the scope
+            # is thread-local, so it outlives spark.stop())
+            if df.sparkSession.sparkContext._jsc is not None:
+                df.unpersist()
 
     def __enter__(self) -> "CacheScope":
         return self

@@ -110,11 +110,6 @@ def _cover_geometry(parts: list, res: int) -> tuple[np.ndarray, np.ndarray]:
     return cells, inside & ~near_edge
 
 
-def _cover_one(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Single-ring legacy wrapper over :func:`_cover_geometry`."""
-    return _cover_geometry([[ring]], res)
-
-
 def polygon_cover_cells(admin: DataFrame, res: int) -> DataFrame:
     """(adm_id, cell_id, full) covering triples at ``res``.
 
@@ -208,13 +203,6 @@ def _points_in_rings(
     elif boundary != "half_open":
         raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     return inside
-
-
-def _points_in_ring(
-    lon: np.ndarray, lat: np.ndarray, ring: np.ndarray, boundary: str = "half_open"
-) -> np.ndarray:
-    """Single-ring wrapper over :func:`_points_in_rings`."""
-    return _points_in_rings(lon, lat, [ring], boundary)
 
 
 def contains_wkb_udf(boundary: str = "half_open"):

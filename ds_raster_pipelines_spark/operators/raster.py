@@ -10,13 +10,14 @@ Plan shape (scale-first):
      dropped with a broadcast left-semi join on cell_id — the "clip when
      initially reading" move the reference wishes it did
      (era5_cogs.md:174-176).
-  2. One Arrow kernel: decode tile → per-polygon pixel-window reduction
-     (sum/count over the masked block). Pixels never leave the kernel.
+  2. One Arrow kernel: decode tile → per-polygon reduction over the
+     pixel runs inside the polygon. Pixels never leave the kernel.
   3. Integer sums → groupBy(adm_id) exact aggregation.
 
 Geometry dictionary ships via closure (admin tables are broadcast-small).
-For arbitrary (non-rect) rings the kernel falls back to a vectorized
-center-in-polygon ray cast per tile; rectangles use pure window arithmetic.
+Every geometry — rectangle, arbitrary ring, holed or multipart — goes
+through one scanline rasterizer (Raptor-style run-length, see
+``_scanline_runs``) with the half-open pixel-centre rule of ``pip_join``.
 """
 
 from __future__ import annotations
@@ -27,9 +28,81 @@ from pyspark.sql import functions as F
 
 from .. import grid
 from ..corpus import TILE_H, TILE_W, parse_wkb_geometry
-from .pip import _is_axis_rect, _points_in_rings, polygon_cover_cells
 
 ZONAL_PIXEL_SCHEMA = "gi int, px_count bigint, px_sum bigint"
+
+# per-chunk budget (elements) for the edges x rows crossing matrix and the
+# rows x cols pixel buffer of one geometry's hit tiles
+_CHUNK_CELLS = 1 << 21
+
+
+def _ring_edges(parts: list) -> tuple[tuple, tuple]:
+    """For one geometry (``parse_wkb_geometry`` parts): the bounds
+    (x_min, x_max, y_min, y_max) of every ring edge, and the endpoints
+    (x1, y1, x2, y2) of the non-horizontal edges — a horizontal edge
+    crosses no pixel-centre row."""
+    seg = np.concatenate([np.hstack([r[:-1], r[1:]]) for part in parts for r in part])
+    x1, y1, x2, y2 = seg.T
+    box = (np.minimum(x1, x2), np.maximum(x1, x2), np.minimum(y1, y2), np.maximum(y1, y2))
+    sloped = y1 != y2
+    return box, (x1[sloped], y1[sloped], x2[sloped], y2[sloped])
+
+
+def _first_centre_at(v, lon0, dx, w):
+    """Per run edge: index of the first pixel whose centre
+    ``lon0 + (c + 0.5) * dx`` is >= v, clipped to [0, w]. The closed-form
+    estimate is corrected by one step against that exact centre value, so
+    a run edge within rounding of a centre agrees with the ray cast."""
+    c = np.minimum(np.maximum(np.ceil((v - lon0) / dx - 0.5), 0), w).astype(np.int64)
+    c -= (c > 0) & (lon0 + (c - 0.5) * dx >= v)
+    c += (c < w) & (lon0 + (c + 0.5) * dx < v)
+    return c
+
+
+def _scanline_runs(lon0, lat_top, ws, hs, span_deg: float, edges: tuple):
+    """Pixels inside one geometry (half-open pixel-centre rule), over
+    tiles given as arrays of their ``lon0`` / ``lat_top`` / ``w`` / ``h``;
+    ``edges`` is the geometry's ``_ring_edges``.
+
+    Each pixel-centre row is crossed with every edge by the test of
+    ``pip._points_in_rings``: an edge crosses iff ``(y1 > lat) !=
+    (y2 > lat)``, and a centre is left of the crossing iff ``lon < xint``.
+    A closed ring crosses a row an even number of times, so the row's
+    sorted crossings pair up even-odd into ``[x_a, x_b)`` spans; holes
+    and multiparts follow from the parity. A tile whose open footprint no edge touches
+    lies wholly inside or outside, so it is scanned as one pixel at its
+    centre and taken whole if that pixel is in. Cost is
+    O(rows x edges + runs) over the tiles an edge touches.
+
+    Returns (whole, tile, start, length): the tiles wholly inside, and the
+    runs of the others sorted by (tile, start) — pixels ``start ..
+    start+length-1`` of the tile's row-major buffer. Tiles index the given
+    arrays; every run holds at least one pixel.
+    """
+    (bx0, bx1, by0, by1), (x1, y1, x2, y2) = edges
+    # open footprints: an edge along a tile's border leaves every pixel
+    # centre (half a pixel inside) on one side of it
+    touched = (
+        (bx0[:, None] < lon0 + span_deg)
+        & (bx1[:, None] > lon0)
+        & (by0[:, None] < lat_top)
+        & (by1[:, None] > lat_top - span_deg)
+    ).any(axis=0)
+    rw, rh = np.where(touched, ws, 1), np.where(touched, hs, 1)
+    row_tile = np.repeat(np.arange(len(rh)), rh)
+    row = np.arange(row_tile.size) - np.repeat(np.cumsum(rh) - rh, rh)
+    lat = lat_top[row_tile] - (row + 0.5) * (span_deg / rh[row_tile])
+    ei, ri = np.nonzero((y1[:, None] > lat) != (y2[:, None] > lat))
+    xint = x1[ei] + (lat[ri] - y1[ei]) * (x2[ei] - x1[ei]) / (y2[ei] - y1[ei])
+    order = np.lexsort((xint, ri))
+    ri = ri[order]
+    t = row_tile[ri]
+    col = _first_centre_at(xint[order], lon0[t], span_deg / rw[t], rw[t])
+    lo, hi, t, ri = col[0::2], col[1::2], t[0::2], ri[0::2]
+    keep = hi > lo
+    part = keep & touched[t]
+    tp = t[part]
+    return t[keep & ~touched[t]], tp, row[ri[part]] * ws[tp] + lo[part], (hi - lo)[part]
 
 
 def zonal_pixel_stats(
@@ -53,11 +126,19 @@ def zonal_pixel_stats(
     ``overview_level`` > 0 reads the tiles' REDUCED-RESOLUTION pages
     instead of full resolution (COG corpora only — the zoomed-out read
     path a COG exists for: each level halves both dims, so level L scans
-    4^-L of the pixels). The geo-transform scales automatically (windows
+    4^-L of the pixels). The geo-transform scales automatically (runs
     derive from the per-level dims).
 
+    A pixel belongs to a geometry iff its centre does under the half-open
+    even-odd rule of ``pip_join`` (``boundary="half_open"``): a centre on
+    a rectangle's left/bottom edge is in, on its right/top edge out, and
+    mirrored on hole edges. So the answer does not depend on how the
+    geometry's vertices are written, and abutting geometries share no
+    pixel.
+
     Output: (adm_id, px_count, px_sum, px_mean) — integer-exact sums, so
-    bit-identical across engines and parallelism levels.
+    bit-identical across engines and parallelism levels. A geometry that
+    holds no pixel centre has no row.
     """
     return _zonal_pixel_reduce(
         images, admin, res, span_deg, overview_level, mode="stats"
@@ -74,11 +155,12 @@ def zonal_value_histogram(
     """Per-admin pixel-VALUE histogram over decoded tiles — the
     landcover-fraction / class-composition zonal aggregate (per-zone
     per-class pixel counts; rasterstats' ``categorical=True``). Same
-    prune + masked-kernel machinery as zonal_pixel_stats, but the
-    kernel's per-geometry reduction is a signed uint8 bincount instead
-    of a masked sum: a batch leaves the kernel as <= n_geoms x 256 rows
-    no matter how many pixels it decoded — the map-side-partial shape a
-    100 TB class-composition scan needs.
+    prune + pixel-run machinery and the same half-open pixel-centre rule
+    (shared with ``pip_join``) as zonal_pixel_stats, but the kernel's
+    per-geometry reduction is a uint8 bincount instead of a sum: a batch
+    leaves the kernel as <= n_geoms x 256 rows no matter how many pixels
+    it decoded — the map-side-partial shape a 100 TB class-composition
+    scan needs.
 
     Output: (adm_id, value, n_px), only (zone, value) pairs that occur.
     """
@@ -137,9 +219,8 @@ def _zonal_pixel_reduce(
             "pre-partition the admin table (e.g. per region) and union the "
             "per-partition results"
         )
-    # parts structure (holes + multiparts, r7); "rings" below = flattened
+    # parts structure (holes + multiparts, r7)
     geoms = [parse_wkb_geometry(r["geom_wkb"]) for r in rows]
-    rings = [[rg for part in parts for rg in part] for parts in geoms]
     adm_ids = [r["adm_id"] for r in rows]
     half = span_deg / 2.0
 
@@ -178,51 +259,23 @@ def _zonal_pixel_reduce(
         pts = with_cell(images.where(F.col("pcell").isin(parents)).drop("pcell"))
     pruned = pts.join(F.broadcast(cover), "cell_id", "left_semi").drop("cell_id")
 
-    # 2. decode + per-polygon masked reduction in one Arrow kernel
-    #
-    # Geometry specialization: a geometry whose EVERY ring is an axis-
-    # aligned rectangle (incl. holed/multipart rect compositions — admin
-    # fixtures, tiling grids, bbox masks) lowers to SIGNED pixel windows
-    # by inclusion-exclusion: part exteriors contribute +window, holes
-    # -window; the per-gi sum reproduces the even-odd membership exactly
-    # because holes nest inside their exterior (simple-features validity).
-    # This keeps the whole path on the numpy-broadcast window algebra —
-    # measured ~19x over the per-tile ray cast on the holed fixture at
-    # 10x sf0.1. Degenerate caveat (shared with the single-rect path):
-    # window bounds are CLOSED on pixel centers, so a pixel center lying
-    # EXACTLY on a ring edge follows the closed convention here vs
-    # half-open in the ray-cast path.
-    def _all_axis_rects(grings: list) -> bool:
-        return all(_is_axis_rect(r) for r in grings)
-
-    rect_info = []  # (g, sgn, min_lon, min_lat, max_lon, max_lat)
-    for g, grings in enumerate(rings):
-        if _all_axis_rects(grings):
-            for part in geoms[g]:
-                for j, ring in enumerate(part):
-                    rect_info.append(
-                        (g, 1 if j == 0 else -1,
-                         ring[:, 0].min(), ring[:, 1].min(),
-                         ring[:, 0].max(), ring[:, 1].max())
-                    )
-    # generic geometries carry their flat rings + per-PART exterior bboxes
-    # (the tile pre-check must hit any part, not the whole-geometry bbox —
-    # a 2-part geometry spanning the globe would otherwise ray-cast every
-    # tile in between)
-    generic = [
+    # 2. decode + per-polygon run reduction in one Arrow kernel. Each
+    # geometry carries its ring edges and per-PART exterior bboxes (the
+    # tile pre-check must hit any part, not the whole-geometry bbox — a
+    # 2-part geometry spanning the globe would otherwise scan every tile
+    # in between).
+    prepared = [
         (
-            g,
-            rings[g],
+            _ring_edges(parts),
             [
                 (
                     part[0][:, 0].min(), part[0][:, 1].min(),
                     part[0][:, 0].max(), part[0][:, 1].max(),
                 )
-                for part in geoms[g]
+                for part in parts
             ],
         )
-        for g in range(len(rings))
-        if not _all_axis_rects(rings[g])
+        for parts in geoms
     ]
 
     def kernel(batches):
@@ -237,12 +290,12 @@ def _zonal_pixel_reduce(
             fmts = np.asarray(col["fmt"].to_pylist(), dtype=object)
             ws = col["w"].to_numpy(zero_copy_only=False).astype(np.int64)
             hs = col["h"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if overview_level:  # window math follows the per-level dims
+            if overview_level:  # run math follows the per-level dims
                 # fail fast with a clear message on misuse: only COG blobs
                 # carry overview pages, and the floor-shift window math is
                 # only exact when the dims divide by 2^level — a mixed or
                 # odd-dim corpus would otherwise die mid-decode (or worse,
-                # silently diverge windows from decoded dims)
+                # silently diverge runs from decoded dims)
                 bad_fmt = fmts[fmts != "cog"]
                 if bad_fmt.size:
                     raise ValueError(
@@ -272,13 +325,13 @@ def _zonal_pixel_reduce(
                 flip_y = ~col["lat_descending"].to_numpy(zero_copy_only=False).astype(bool)
             else:
                 flip_y = np.zeros(n, dtype=bool)
-            out_gi: list[int] = []
-            out_cnt: list[int] = []
-            out_sum: list[int] = []
-            # hist mode: per-geometry signed bincount — a batch leaves the
-            # kernel as <= n_geoms x 256 rows regardless of pixel count
+            # per-geometry totals for the batch: a batch leaves the kernel
+            # as <= n_geoms rows (stats) or <= n_geoms x 256 rows (hist)
+            # regardless of pixel count
+            px_cnt = np.zeros(len(geoms), dtype=np.int64)
+            px_sum = np.zeros(len(geoms), dtype=np.int64)
             hist2d = (
-                np.zeros((len(rings), 256), dtype=np.int64)
+                np.zeros((len(geoms), 256), dtype=np.int64)
                 if mode == "hist"
                 else None
             )
@@ -301,34 +354,10 @@ def _zonal_pixel_reduce(
                         px = px[:, ::-1]
                     if flip_y[k]:
                         px = px[::-1, :]
-                    px_cache[k] = px
-                return px
+                    px_cache[k] = px.reshape(-1)
+                return px_cache[k]
 
-            # axis-rect geometries: SIGNED pixel windows for ALL tiles at
-            # once (numpy broadcast per rect ring; holes carry sgn=-1 and
-            # subtract by inclusion-exclusion); Python touches only
-            # overlapping (tile, ring) pairs.
-            for g, sgn, A, B, C, D in rect_info:
-                x_lo = np.maximum(0, np.ceil((A - lon0) * ws / span_deg - 0.5)).astype(np.int64)
-                x_hi = np.minimum(ws - 1, np.floor((C - lon0) * ws / span_deg - 0.5)).astype(np.int64)
-                y_lo = np.maximum(0, np.ceil((lat_top - D) * hs / span_deg - 0.5)).astype(np.int64)
-                y_hi = np.minimum(hs - 1, np.floor((lat_top - B) * hs / span_deg - 0.5)).astype(np.int64)
-                hit = (x_lo <= x_hi) & (y_lo <= y_hi)
-                for k in np.nonzero(hit)[0]:
-                    block = tile(k)[y_lo[k] : y_hi[k] + 1, x_lo[k] : x_hi[k] + 1]
-                    if hist2d is not None:
-                        # signed bincount: holes (sgn=-1) subtract their
-                        # per-value counts by the same inclusion-exclusion
-                        hist2d[g] += sgn * np.bincount(
-                            block.ravel(), minlength=256
-                        )
-                        continue
-                    out_gi.append(g)
-                    out_cnt.append(sgn * block.size)
-                    out_sum.append(sgn * int(block.sum(dtype=np.int64)))
-            # generic rings: vectorized per-part bbox precheck, per-tile
-            # ray cast over ALL rings (holes subtract by parity)
-            for g, grings, part_bboxes in generic:
+            for g, (edges, part_bboxes) in enumerate(prepared):
                 hit = np.zeros(n, dtype=bool)
                 for rx0, ry0, rx1, ry1 in part_bboxes:
                     hit |= (
@@ -337,20 +366,47 @@ def _zonal_pixel_reduce(
                         & (lat_top - span_deg <= ry1)
                         & (lat_top >= ry0)
                     )
-                for k in np.nonzero(hit)[0]:
-                    w, h = int(ws[k]), int(hs[k])
-                    gx = lon0[k] + (np.arange(w) + 0.5) * (span_deg / w)
-                    gy = lat_top[k] - (np.arange(h) + 0.5) * (span_deg / h)
-                    lon_g, lat_g = np.meshgrid(gx, gy)
-                    mask = _points_in_rings(lon_g.ravel(), lat_g.ravel(), grings).reshape(h, w)
-                    if not mask.any():
+                hit_k = np.nonzero(hit)[0]
+                if not hit_k.size:
+                    continue
+                # chunk the hit tiles so the edges x rows crossing matrix
+                # and the rows x cols pixel buffer stay bounded
+                per_tile = int(hs[hit_k].max()) * max(len(edges[1][0]), int(ws[hit_k].max()))
+                step = max(1, _CHUNK_CELLS // max(per_tile, 1))
+                for c0 in range(0, len(hit_k), step):
+                    ks = hit_k[c0 : c0 + step]
+                    whole, t, start, length = _scanline_runs(
+                        lon0[ks], lat_top[ks], ws[ks], hs[ks], span_deg, edges
+                    )
+                    if not (whole.size or t.size):
                         continue
-                    if hist2d is not None:
-                        hist2d[g] += np.bincount(tile(k)[mask], minlength=256)
-                        continue
-                    out_gi.append(g)
-                    out_cnt.append(int(mask.sum()))
-                    out_sum.append(int(tile(k)[mask].sum(dtype=np.int64)))
+                    # decode only the tiles with pixels inside, into one
+                    # flat buffer: whole tiles first, then the run tiles
+                    first = np.diff(t, prepend=-1) != 0
+                    used = ks[np.concatenate((whole, t[first]))]
+                    sizes = ws[used] * hs[used]
+                    flat = np.concatenate([tile(k) for k in used])
+                    n_whole = int(sizes[: whole.size].sum())
+                    parts = [flat[:n_whole]]
+                    if t.size:
+                        # runs are sorted and disjoint: the run tiles' inside
+                        # mask is (gap, run) pairs of False/True
+                        start += (np.cumsum(sizes) - sizes)[whole.size + np.cumsum(first) - 1]
+                        gap = start - np.concatenate(([n_whole], (start + length)[:-1]))
+                        inside = np.repeat(
+                            np.tile([False, True], t.size),
+                            np.stack([gap, length], axis=1).ravel(),
+                        )
+                        parts.append(flat[n_whole : n_whole + inside.size][inside])
+                    for v in parts:
+                        if hist2d is not None:
+                            # bincount widens its input to intp: slices keep
+                            # that copy in cache
+                            for i in range(0, v.size, 1 << 16):
+                                hist2d[g] += np.bincount(v[i : i + (1 << 16)], minlength=256)
+                        else:
+                            px_cnt[g] += v.size
+                            px_sum[g] += v.sum(dtype=np.int64)
             if hist2d is not None:
                 gi_nz, val_nz = np.nonzero(hist2d)
                 yield pa.RecordBatch.from_arrays(
@@ -362,11 +418,12 @@ def _zonal_pixel_reduce(
                     names=["gi", "value", "n_px"],
                 )
                 continue
+            gi_nz = np.nonzero(px_cnt)[0]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(out_gi, pa.int32()),
-                    pa.array(out_cnt, pa.int64()),
-                    pa.array(out_sum, pa.int64()),
+                    pa.array(gi_nz.astype(np.int32)),
+                    pa.array(px_cnt[gi_nz]),
+                    pa.array(px_sum[gi_nz]),
                 ],
                 names=["gi", "px_count", "px_sum"],
             )
@@ -397,9 +454,6 @@ def _zonal_pixel_reduce(
         return (
             partial.groupBy("gi", "value")
             .agg(F.sum("n_px").alias("n_px"))
-            # signed hole subtraction can net a (zone, value) to zero —
-            # same "does not occur" as the ray-cast path's absence
-            .where(F.col("n_px") > 0)
             .join(idx_df, "gi")
             # no global orderBy: a range sort adds a sampling pass + extra
             # stage that zonal_majority/zonal_quantiles immediately
@@ -409,10 +463,6 @@ def _zonal_pixel_reduce(
     return (
         partial.groupBy("gi")
         .agg(F.sum("px_count").alias("px_count"), F.sum("px_sum").alias("px_sum"))
-        # a geometry whose only corpus overlap is inside its holes nets to
-        # zero pixels under the signed-window path — same "no pixels" as
-        # the ray-cast path's absence, so drop it (and keep px_mean finite)
-        .where(F.col("px_count") > 0)
         .join(idx_df, "gi")
         .select(
             "adm_id",

@@ -21,13 +21,8 @@ PUNCT_RX = r"[.,!?;:'\"()-]"
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count (the BPE-ish regex variant is tokens_bpe)."""
+    """Whitespace token count."""
     return F.size(F.split(text, " "))
-
-
-def tokens_bpe_ish(text: Column) -> Column:
-    """BPE-ish subword proxy: alnum runs + punctuation marks each count."""
-    return F.size(F.filter(F.split(text, r"(?<=\W)|(?=\W)"), lambda t: F.trim(t) != ""))
 
 
 def count_word(text: Column, word: str) -> Column:

@@ -4456,8 +4456,8 @@ FROM (
 @register("zonal_majority_holed", _ZMAJ_HOLED_ORACLE)
 def zonal_majority_holed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal majority where the zones have holes and disjoint parts: the
-    kernel's per-value bincounts must SUBTRACT hole windows (signed
-    inclusion-exclusion per value) — a mask that ignores holes inflates
+    kernel's per-value bincounts must leave out the hole pixels (the
+    oracle subtracts signed hole windows) — a mask that ignores holes inflates
     exactly the hole columns' value counts and shifts the mode, so hole
     handling is a value divergence, not just a count inflation."""
     from .operators.raster import zonal_majority

@@ -340,6 +340,50 @@ def test_cache_scope_isolates_invocations(spark, docs):
     assert not any(df.storageLevel.useMemory for df in s1._dfs + s2._dfs)
 
 
+_SESSION_RESTART_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from ds_raster_pipelines_spark.operators.dedup import minhash_dedup_pairs
+from ds_raster_pipelines_spark.session import get_spark
+
+def pairs(spark):
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over the lazy dog {i // 2}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    return sorted(tuple(r) for r in minhash_dedup_pairs(docs, max_bucket=50).collect())
+
+a = get_spark("session_a", cpus=1)
+first = pairs(a)
+a.stop()
+b = get_spark("session_b", cpus=1)  # no release_cached() in between
+second = pairs(b)
+b.stop()
+assert first and first == second, (first, second)
+print("ok")
+"""
+
+
+def test_default_cache_scope_survives_session_restart():
+    """The thread-local default CacheScope outlives spark.stop(): the first
+    minhash_dedup_pairs in a new session must drop the stopped session's
+    cached frames instead of failing in unpersist. Runs in a fresh process
+    so the shared test session is never stopped."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    out = subprocess.run(
+        [sys.executable, "-c", _SESSION_RESTART_SCRIPT, repo],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().endswith("ok")
+
+
 def test_decontaminate_overlap_constructed(spark):
     """Constructed contamination: an eval doc verbatim in the corpus, a
     paraphrase sharing a long span, an innocent doc, and a boilerplate

@@ -255,9 +255,9 @@ def test_pip_join_distributed_salted_identical(spark):
 def test_zonal_value_histogram_marginals_match_stats(spark):
     """The hist kernel's per-zone marginals (sum of n_px, sum of
     value*n_px) must equal the stats kernel's px_count/px_sum on the
-    SAME holed/multipart fixture — the two reductions share mask
-    machinery but not accumulation code, so drift in either signed path
-    (window algebra vs signed bincount) breaks the identity."""
+    SAME holed/multipart fixture — the two reductions share the scanline
+    runs but not accumulation code, so drift in either (pixel sum vs
+    bincount) breaks the identity."""
     from pyspark.sql import functions as F
 
     from ds_raster_pipelines_spark import corpus
