@@ -733,9 +733,12 @@ long avi_scan(const unsigned char *d, int64_t n,
                             int64_t d3 = p3 + 8;
                             if (d3 + s3 > e3) return AVIERR;
                             if (f3[0]=='s' && f3[1]=='t' && f3[2]=='r' && f3[3]=='h'
-                                && d3 + 8 <= n
-                                && d[d3]=='v' && d[d3+1]=='i' && d[d3+2]=='d' && d[d3+3]=='s')
+                                && d3 + 4 <= n
+                                && d[d3]=='v' && d[d3+1]=='i' && d[d3+2]=='d' && d[d3+3]=='s') {
+                                /* py slices a short handler at the buffer end */
+                                if (d3 + 8 > n) return AVIERR;
                                 handler = (int64_t)rd32le(d, d3 + 4);
+                            }
                             p3 = d3 + s3 + (s3 % 2);
                         }
                     }

@@ -13,8 +13,10 @@ without ``all_touched``), SURVEY.md §2.3 J5:
                ray-cast over WKB rings, Arrow-batched (no per-row Python);
                or a JVM-only bbox predicate for axis-aligned geometries.
 
-Semantics flag mirrors the reference: ``centroid`` (default clip: a tile
-belongs iff its centroid is inside) vs ``all_touched`` (any intersection).
+A tile belongs to a polygon iff its centroid is inside (the reference's
+default clip), under one half-open on-edge rule (see pip_join). The
+reference's ``all_touched`` variant (any intersection) is the
+``pip_all_touched`` query in queries_registry.py.
 """
 
 from __future__ import annotations
@@ -159,9 +161,7 @@ def polygon_cover_cells(admin: DataFrame, res: int) -> DataFrame:
 # ---------------------------------------------------------- refine stage ---
 
 
-def _points_in_rings(
-    lon: np.ndarray, lat: np.ndarray, rings: list, boundary: str = "half_open"
-) -> np.ndarray:
+def _points_in_rings(lon: np.ndarray, lat: np.ndarray, rings: list) -> np.ndarray:
     """Vectorized even-odd ray cast over ALL rings of a (multi)polygon
     (edge loops are over the few polygon vertices; points are the
     vectorized axis). Parity across exterior + interior rings classifies
@@ -169,14 +169,11 @@ def _points_in_rings(
     outside; a point in any disjoint part crosses only that part's
     exterior ⇒ odd ⇒ inside.
 
-    ``boundary`` pins the on-edge convention (see pip_join):
-    * ``half_open`` — the bare ray cast: for an axis-aligned rectangle,
-      left/bottom edges are inside, right/top are out. For a hole the
-      convention MIRRORS: a point on the hole's left/bottom edge is
-      inside-the-hole, hence OUTSIDE the polygon. Points strictly
-      interior/exterior are unaffected.
-    * ``closed`` — an explicit on-segment test forces every point on ANY
-      ring (hole edges included) inside the polygon (rio.clip-style).
+    On-edge points follow the bare ray cast's half-open rule (see
+    pip_join): for an axis-aligned rectangle, left/bottom edges are
+    inside, right/top are out. For a hole the rule MIRRORS: a point on
+    the hole's left/bottom edge is inside-the-hole, hence OUTSIDE the
+    polygon.
     """
     inside = np.zeros(lon.shape, dtype=bool)
     for ring in rings:
@@ -187,25 +184,10 @@ def _points_in_rings(
             with np.errstate(divide="ignore", invalid="ignore"):
                 xint = x1 + (lat - y1) * (x2 - x1) / (y2 - y1)
             inside ^= crosses & (lon < xint)
-    if boundary == "closed":
-        on_edge = np.zeros(lon.shape, dtype=bool)
-        for ring in rings:
-            x, y = ring[:, 0], ring[:, 1]
-            for e in range(len(ring) - 1):
-                x1, y1, x2, y2 = x[e], y[e], x[e + 1], y[e + 1]
-                collinear = (x2 - x1) * (lat - y1) == (y2 - y1) * (lon - x1)
-                in_seg = (
-                    (lon >= min(x1, x2)) & (lon <= max(x1, x2))
-                    & (lat >= min(y1, y2)) & (lat <= max(y1, y2))
-                )
-                on_edge |= collinear & in_seg
-        inside |= on_edge
-    elif boundary != "half_open":
-        raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     return inside
 
 
-def contains_wkb_udf(boundary: str = "half_open"):
+def contains_wkb_udf():
     """Exact PIP refine against a per-row WKB column (POLYGON with holes
     or MULTIPOLYGON). Groups the batch by polygon so the ray cast runs
     vectorized once per distinct geometry per batch. NOTE: prefer
@@ -222,16 +204,13 @@ def contains_wkb_udf(boundary: str = "half_open"):
         for g, blob in enumerate(uniques):
             mask = codes == g
             rings = _as_flat_rings(parse_wkb_geometry(blob))
-            out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], rings, boundary)
+            out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], rings)
         return pd.Series(out)
 
     return _contains
 
 
-contains_udf = contains_wkb_udf()  # the default half-open instance
-
-
-def contains_indexed_udf(rings: list, boundary: str = "half_open"):
+def contains_indexed_udf(rings: list):
     """Exact PIP refine against a small geometry dictionary: candidates
     carry only an int geometry index; the parsed geometries (single ring
     or flat ring-lists incl. holes/multiparts) ship to executors once
@@ -251,9 +230,7 @@ def contains_indexed_udf(rings: list, boundary: str = "half_open"):
             if g < 0:  # interior-cell shortcut: inside by construction
                 out[mask] = True
             else:
-                out[mask] = _points_in_rings(
-                    lon_v[mask], lat_v[mask], flats[g], boundary
-                )
+                out[mask] = _points_in_rings(lon_v[mask], lat_v[mask], flats[g])
         return pd.Series(out)
 
     return _contains
@@ -349,11 +326,9 @@ def pip_join(
     lon_col: str = "lon_c",
     lat_col: str = "lat_c",
     refine: str = "wkb",
-    broadcast_cover: bool = True,
     cover: DataFrame | None = None,
     rings: list[np.ndarray] | None = None,
     adm_rows: list | None = None,
-    boundary: str = "half_open",
 ) -> DataFrame:
     """points (with lon/lat) ⨝ admin polygons. Returns points + adm_id.
 
@@ -365,20 +340,12 @@ def pip_join(
     ``refine='wkb'``  : force the generic exact ray-cast kernel.
     ``refine='bbox'`` : force the JVM between-predicate (rects only).
 
-    ``boundary`` pins the on-edge convention, CONSISTENTLY across every
-    refine mode and the distributed path (r4 ADVICE: the modes used to
-    diverge on edge points — bbox was closed while the ray cast was
-    half-open):
-    * ``half_open`` (default) — a point on a rectangle's left/bottom edge
-      is inside, right/top is out (the bare even-odd ray-cast convention;
-      matches raster windowing, where a pixel belongs to exactly one
-      abutting polygon — no double-count, no drop).
-    * ``closed`` — every on-edge point is inside (rio.clip-style; a point
-      on a shared edge of two abutting polygons joins BOTH).
-    Interior/exterior points classify identically under both.
+    On-edge points follow ONE half-open rule across every refine mode
+    and the distributed path: a point on a rectangle's left/bottom edge
+    is inside, right/top is out (the bare even-odd ray-cast convention,
+    shared with raster.zonal_pixel_stats; a pixel belongs to exactly one
+    of two abutting polygons — no double-count, no drop).
     """
-    if boundary not in ("half_open", "closed"):
-        raise ValueError(f"boundary={boundary!r} (want 'half_open' or 'closed')")
     helper_cols = ["full", "_gi", "_mnx", "_mny", "_mxx", "_mxy"]
     pts = points.withColumn("cell_id", grid.encode_col(F.col(lon_col), F.col(lat_col), res))
     if cover is None or rings is None or adm_rows is None:
@@ -387,34 +354,26 @@ def pip_join(
         except PolygonSetTooLarge:
             # large-geometry regime: nothing may pass through the driver —
             # switch to the fully distributed cover + per-row-WKB refine
-            return pip_join_distributed(
-                points, admin, res, lon_col, lat_col, boundary=boundary
-            )
+            return pip_join_distributed(points, admin, res, lon_col, lat_col)
     if refine == "auto":
         refine = "bbox" if all(_is_axis_rect(r) for r in rings) else "wkb"
-    cand = pts.join(F.broadcast(cover) if broadcast_cover else cover, "cell_id")
+    cand = pts.join(F.broadcast(cover), "cell_id")
     if refine == "bbox":
         # exact refine for axis-rect geometries as codegen'd predicates
         # (the bounds travel inside the single cover broadcast) — zero
-        # extra Python stages in the task pipeline. The interval shape
-        # follows ``boundary`` so bbox and ray-cast agree on edge points.
-        if boundary == "closed":
-            in_rect = (
-                F.col(lon_col).between(F.col("_mnx"), F.col("_mxx"))
-                & F.col(lat_col).between(F.col("_mny"), F.col("_mxy"))
-            )
-        else:
-            in_rect = (
-                (F.col(lon_col) >= F.col("_mnx")) & (F.col(lon_col) < F.col("_mxx"))
-                & (F.col(lat_col) >= F.col("_mny")) & (F.col(lat_col) < F.col("_mxy"))
-            )
+        # extra Python stages in the task pipeline. The half-open
+        # intervals agree with the ray cast on edge points.
+        in_rect = (
+            (F.col(lon_col) >= F.col("_mnx")) & (F.col(lon_col) < F.col("_mxx"))
+            & (F.col(lat_col) >= F.col("_mny")) & (F.col(lat_col) < F.col("_mxy"))
+        )
         return cand.where(F.col("full") | in_rect).drop(*helper_cols)
     # interior shortcut: candidates in 'full' cells are inside by
     # construction (the UDF gets -1 and short-circuits them vectorized).
     # Kept as ONE plan branch: splitting full/edge into a union would
     # re-execute everything upstream of the candidates — including the
     # decode kernel — twice.
-    refine_udf = contains_indexed_udf(rings, boundary)
+    refine_udf = contains_indexed_udf(rings)
     gi = F.when(F.col("full"), F.lit(-1)).otherwise(F.col("_gi"))
     return cand.where(refine_udf(F.col(lon_col), F.col(lat_col), gi)).drop(*helper_cols)
 
@@ -426,7 +385,6 @@ def pip_join_distributed(
     lon_col: str = "lon_c",
     lat_col: str = "lat_c",
     cover: DataFrame | None = None,
-    boundary: str = "half_open",
     n_salt: int | None = None,
     hot_cells: DataFrame | None = None,
     hot_threshold: int | None = None,
@@ -437,7 +395,7 @@ def pip_join_distributed(
     Plan: distributed cover (polygon_cover_cells, one Arrow stage over the
     polygon table) → shuffle equi-join points⨝cover on cell_id → shuffle
     join on adm_id to attach each candidate's own WKB → exact ray-cast
-    refine with contains_udf (batches factorized by geometry, so each ring
+    refine with contains_wkb_udf (batches factorized by geometry, so each ring
     parses once per batch, and interior-cell candidates skip the geometry
     entirely). Two shuffles + two Arrow stages — the shape that survives a
     10^6-polygon admin table on 1000 executors, where the broadcast plan
@@ -514,6 +472,6 @@ def pip_join_distributed(
     else:
         cand = pts.join(cover, "cell_id")
         withwkb = cand.join(admin.select("adm_id", "geom_wkb"), "adm_id")
-    refine = contains_wkb_udf(boundary)
+    refine = contains_wkb_udf()
     keep = F.col("full") | refine(F.col(lon_col), F.col(lat_col), F.col("geom_wkb"))
     return withwkb.where(keep).drop("full", "geom_wkb")

@@ -130,7 +130,7 @@ def zonal_pixel_stats(
     derive from the per-level dims).
 
     A pixel belongs to a geometry iff its centre does under the half-open
-    even-odd rule of ``pip_join`` (``boundary="half_open"``): a centre on
+    even-odd rule of ``pip_join``: a centre on
     a rectangle's left/bottom edge is in, on its right/top edge out, and
     mirrored on hole edges. So the answer does not depend on how the
     geometry's vertices are written, and abutting geometries share no

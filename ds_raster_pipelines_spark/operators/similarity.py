@@ -5,15 +5,17 @@
                       bit-identical across engines and parallelism. (This is
                       also the practical int8/int16-quantization trick used
                       at 1e12-vector scale.)
-* ``cosine_topk``   — brute-force exact top-k: cross join + integer dot /
-                      precomputed norms, rank window. O(n·m); the baseline.
+* ``cosine_topk``   — brute-force exact top-k: the bounded query side is
+                      broadcast as one quantized matrix and every corpus
+                      partition scores it with a numpy GEMM (exact integer
+                      dots). O(n·m); the recall yardstick.
 * ``lsh_topk``      — sign-LSH bucketed approximate top-k: bucket on the
                       sign bits of a few fixed components, search within the
-                      bucket only. The 100 TB path: the cross join becomes a
-                      per-bucket join (equi-join on bucket id), cutting
+                      bucket only (equi-join on bucket id), cutting
                       candidates by ~2^bits.
 
-All JVM-side (zip_with + aggregate on int arrays); no UDFs.
+The join-based operators are JVM-side (zip_with + aggregate on int
+arrays); the GEMM operators decide in the JVM from exact integer dots.
 """
 
 from __future__ import annotations
@@ -70,23 +72,23 @@ def _ranked(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _sim_pairs(queries: DataFrame, corpus: DataFrame, join_on: list[str] | None) -> DataFrame:
+def _sim_pairs(queries: DataFrame, corpus: DataFrame, join_on: list[str]) -> DataFrame:
     q = queries.select(
         F.col("vec_id").alias("qid"),
         quantize(F.col("embedding")).alias("qe"),
-        *(join_on or []),
+        *join_on,
     ).withColumn("_nq", norm2_int(F.col("qe")))
     c = corpus.select(
         F.col("vec_id").alias("nid"),
         quantize(F.col("embedding")).alias("ne"),
-        *(join_on or []),
+        *join_on,
     ).withColumn("_nn", norm2_int(F.col("ne")))
     # norms are computed ONCE PER VECTOR before the pair join — inside the
     # join they would be recomputed per candidate pair (64 mults x 2 per
     # pair, ~2/3 of the pair work at high fan-out)
-    joined = q.join(c, join_on) if join_on else q.crossJoin(c)
     return (
-        joined.where(F.col("qid") != F.col("nid"))
+        q.join(c, join_on)
+        .where(F.col("qid") != F.col("nid"))
         .withColumn("_dot", dot_int(F.col("qe"), F.col("ne")))
         .withColumn(
             "sim",
@@ -96,11 +98,10 @@ def _sim_pairs(queries: DataFrame, corpus: DataFrame, join_on: list[str] | None)
     )
 
 
-# cosine_topk is the ONE sanctioned cartesian in the engine (the exact
-# recall yardstick for the LSH/IVF scale paths). This cap bounds the query
-# side so it cannot be invoked at corpus scale by accident: 10k queries x
-# corpus is a measured-baseline job; corpus x corpus at 10^12 is not a job
-# at all. Raise explicitly (max_queries=None) only for labeled experiments.
+# cosine_topk collects and broadcasts its whole query side, so this cap
+# bounds that side: it cannot be invoked at corpus scale by accident. 10k
+# queries x corpus is a measured-baseline job; corpus x corpus at 10^12 is
+# not a job at all.
 MAX_BRUTE_FORCE_QUERIES = 100_000
 
 
@@ -109,7 +110,6 @@ def cosine_topk(
     corpus: DataFrame,
     k: int = 5,
     max_queries: int | None = MAX_BRUTE_FORCE_QUERIES,
-    impl: str = "gemm",
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbours (qid, nid, rank, sim).
 
@@ -117,87 +117,79 @@ def cosine_topk(
     Guarded by ``max_queries`` (counts up to the cap + 1 only); use
     lsh_topk / ivf_topk for unbounded query sets.
 
-    ``impl="gemm"`` (default, r8): the SAME all-pairs computation, but the
-    bounded query side (the max_queries cap makes this a sanctioned
-    control-plane collect) is broadcast as one quantized matrix and each
-    corpus partition computes its dots as a numpy GEMM, emitting only its
-    per-query top-k candidates under the exact global comparator
-    (-sim, nid) — numpy's sim is the same IEEE double expression Spark
-    evaluates, so partition-local top-k preserves the global top-k by
-    total order.  The final rank window runs over |queries| x partitions
-    x k candidate rows with Spark recomputing sim from (dot, na, nb) —
-    bit-identical output to the r7 CartesianProduct plan (pytest-pinned).
-    ``impl="join"`` keeps that cartesian plan (and is used automatically
-    when max_queries=None removes the boundedness guarantee)."""
+    The bounded query side (a control-plane collect under the cap) is
+    broadcast as one quantized matrix and each corpus partition computes
+    its dots as a numpy GEMM, emitting only its per-query top-k
+    candidates under the exact global comparator (-sim, nid) — numpy's
+    sim is the same IEEE double expression Spark evaluates, so
+    partition-local top-k preserves the global top-k by total order.
+    The final rank window runs over |queries| x partitions x k candidate
+    rows with Spark recomputing sim from (dot, na, nb)."""
     if max_queries is not None:
         n = queries.limit(max_queries + 1).count()
         if n > max_queries:
             raise ValueError(
-                f"cosine_topk is the exact cartesian baseline; query side "
-                f"exceeds max_queries={max_queries}. Use lsh_topk/ivf_topk, "
-                "or pass max_queries=None for a labeled experiment."
+                f"cosine_topk is the exact brute-force baseline; query side "
+                f"exceeds max_queries={max_queries}. Use lsh_topk/ivf_topk."
             )
-    if impl == "gemm" and max_queries is not None:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        qpd = (
-            queries.select("vec_id", quantize(F.col("embedding")).alias("qe"))
-            .toPandas()
+    qpd = queries.select("vec_id", quantize(F.col("embedding")).alias("qe")).toPandas()
+    if len(qpd) == 0:
+        return corpus.sparkSession.createDataFrame(
+            [], "qid long, nid long, rank int, sim double"
         )
-        if len(qpd) == 0:
-            return _ranked(_sim_pairs(queries, corpus, None), k)
-        qids = qpd["vec_id"].to_numpy().astype(np.int64)
-        Q = np.vstack(qpd["qe"].to_numpy()).astype(np.int64)
-        qn2 = (Q * Q).sum(axis=1)
-        sc = corpus.sparkSession.sparkContext
-        bc = sc.broadcast((qids, Q, qn2))
-        kk = int(k)
+    qids = qpd["vec_id"].to_numpy().astype(np.int64)
+    Q = np.vstack(qpd["qe"].to_numpy()).astype(np.int64)
+    qn2 = (Q * Q).sum(axis=1)
+    sc = corpus.sparkSession.sparkContext
+    bc = sc.broadcast((qids, Q, qn2))
+    kk = int(k)
 
-        def kernel(batches):
-            qids_, Q_, qn2_ = bc.value
-            nq = len(qids_)
-            for pdf in batches:
-                m = len(pdf)
-                if m == 0:
+    def kernel(batches):
+        qids_, Q_, qn2_ = bc.value
+        nq = len(qids_)
+        for pdf in batches:
+            m = len(pdf)
+            if m == 0:
+                continue
+            nids = pdf["vec_id"].to_numpy().astype(np.int64)
+            V = np.vstack(pdf["ne"].to_numpy()).astype(np.int64)
+            n2 = (V * V).sum(axis=1)
+            G = Q_ @ V.T  # (nq, m) exact int64 dots
+            sim = G / np.sqrt(
+                qn2_[:, None].astype(np.float64) * n2[None, :].astype(np.float64)
+            )
+            out = {"qid": [], "nid": [], "_dot": [], "_nq": [], "_nn": []}
+            for qi in range(nq):
+                mask = nids != qids_[qi]
+                cand = np.nonzero(mask)[0]
+                if len(cand) == 0:
                     continue
-                nids = pdf["vec_id"].to_numpy().astype(np.int64)
-                V = np.vstack(pdf["ne"].to_numpy()).astype(np.int64)
-                n2 = (V * V).sum(axis=1)
-                G = Q_ @ V.T  # (nq, m) exact int64 dots
-                sim = G / np.sqrt(
-                    qn2_[:, None].astype(np.float64) * n2[None, :].astype(np.float64)
-                )
-                out = {"qid": [], "nid": [], "_dot": [], "_nq": [], "_nn": []}
-                for qi in range(nq):
-                    mask = nids != qids_[qi]
-                    cand = np.nonzero(mask)[0]
-                    if len(cand) == 0:
-                        continue
-                    order = np.lexsort((nids[cand], -sim[qi, cand]))[:kk]
-                    sel = cand[order]
-                    out["qid"].append(np.full(len(sel), qids_[qi], np.int64))
-                    out["nid"].append(nids[sel])
-                    out["_dot"].append(G[qi, sel])
-                    out["_nq"].append(np.full(len(sel), qn2_[qi], np.int64))
-                    out["_nn"].append(n2[sel])
-                yield pd.DataFrame(
-                    {c: np.concatenate(v) if v else np.array([], np.int64)
-                     for c, v in out.items()}
-                )
+                order = np.lexsort((nids[cand], -sim[qi, cand]))[:kk]
+                sel = cand[order]
+                out["qid"].append(np.full(len(sel), qids_[qi], np.int64))
+                out["nid"].append(nids[sel])
+                out["_dot"].append(G[qi, sel])
+                out["_nq"].append(np.full(len(sel), qn2_[qi], np.int64))
+                out["_nn"].append(n2[sel])
+            yield pd.DataFrame(
+                {c: np.concatenate(v) if v else np.array([], np.int64)
+                 for c, v in out.items()}
+            )
 
-        cand = corpus.select(
-            "vec_id", quantize(F.col("embedding")).alias("ne")
-        ).mapInPandas(
-            kernel, schema="qid long, nid long, _dot long, _nq long, _nn long"
-        )
-        pairs = cand.withColumn(
-            "sim",
-            F.col("_dot").cast("double")
-            / F.sqrt(F.col("_nq").cast("double") * F.col("_nn").cast("double")),
-        )
-        return _ranked(pairs, k)
-    return _ranked(_sim_pairs(queries, corpus, None), k)
+    cand = corpus.select(
+        "vec_id", quantize(F.col("embedding")).alias("ne")
+    ).mapInPandas(
+        kernel, schema="qid long, nid long, _dot long, _nq long, _nn long"
+    )
+    pairs = cand.withColumn(
+        "sim",
+        F.col("_dot").cast("double")
+        / F.sqrt(F.col("_nq").cast("double") * F.col("_nn").cast("double")),
+    )
+    return _ranked(pairs, k)
 
 
 def lsh_topk(
@@ -338,7 +330,6 @@ def lsh_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.4,
     tables: list[list[int]] | None = None,
-    impl: str = "gemm",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-table sign-LSH.
 
@@ -349,132 +340,99 @@ def lsh_near_dup_pairs(
 
     Output: (id_a, id_b, sim) with id_a < id_b and sim >= threshold.
 
-    Two result-identical implementations (pytest-pinned equal):
-
-    * ``impl="gemm"`` (default, the r8 scale path): candidate pairs are
-      made DISJOINT across tables up front — table k contributes exactly
-      the pairs that collide in table k and in NO earlier table — so the
-      cross-table dropDuplicates disappears, and each (table, bucket)
-      group computes its pairwise integer dot products as one chunked
-      numpy GEMM inside a single applyInPandas stage.  Only pairs at the
-      threshold survive to the JVM.  The r7 join plan shuffled every
-      candidate pair with BOTH 64x8-byte quantized vectors attached
-      (~1.1 KB/pair) into a dropDuplicates exchange — ~27 GB of shuffle
-      at 20k vectors (measured 128.8 s at the driver's sf1.0); the GEMM
-      form ships each vector to exactly one task per table (~26 MB) and
-      does the 64-multiply dots at native BLAS speed (guide §2.3 "shuffle
-      keys and metadata instead of payloads" + §4.2).
-    * ``impl="join"``: the r7 bucket-equi-join + dropDuplicates plan,
-      kept as the pure-JVM reference for the parity gate.
+    Candidate pairs are made DISJOINT across tables up front — table k
+    contributes exactly the pairs that collide in table k and in NO
+    earlier table — so no cross-table dropDuplicates is needed, and each
+    (table, bucket) group computes its pairwise integer dot products as
+    one chunked numpy GEMM inside a single applyInPandas stage. Only
+    pairs at the threshold survive to the JVM, which makes the exact
+    decision on the same IEEE double sim. Each vector ships to exactly
+    one task per table, never a candidate pair carrying both quantized
+    vectors (guide §2.3 "shuffle keys and metadata instead of payloads"
+    + §4.2).
     """
+    import numpy as np
+    import pandas as pd
+
     tables = tables or LSH_TABLES
     e = df.select(
         "vec_id",
         quantize(F.col("embedding")).alias("q"),
         *[lsh_bucket(F.col("embedding"), t).alias(f"_b{k}") for k, t in enumerate(tables)],
     ).withColumn("_n2", norm2_int(F.col("q")))  # once per vector, not per pair
-    sim_of = lambda dot, na, nb: dot.cast("double") / F.sqrt(  # noqa: E731
-        na.cast("double") * nb.cast("double")
-    )
-    if impl == "gemm":
-        import numpy as np
-        import pandas as pd
-
-        parts = None
-        for k in range(len(tables)):
-            prior = (
-                F.array(*[F.col(f"_b{j}") for j in range(k)])
-                if k
-                else F.array().cast("array<int>")
-            )
-            part = e.select(
-                F.lit(k).alias("_t"),
-                F.col(f"_b{k}").cast("int").alias("_bk"),
-                "vec_id",
-                "q",
-                "_n2",
-                prior.cast("array<int>").alias("_prior"),
-            )
-            parts = part if parts is None else parts.unionByName(part)
-
-        # conservative float prefilter: sim is later recomputed in Spark
-        # with the exact same IEEE double ops; the 1e-9 slack only lets a
-        # handful of boundary pairs through for Spark to re-judge
-        thr = float(threshold) - 1e-9
-        chunk = 2048
-
-        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", kind="mergesort")
-            ids = pdf["vec_id"].to_numpy()
-            m = len(ids)
-            out = {"id_a": [], "id_b": [], "_dot": [], "_na": [], "_nb": []}
-            if m >= 2:
-                V = np.vstack(pdf["q"].to_numpy()).astype(np.int64)
-                n2 = pdf["_n2"].to_numpy().astype(np.int64)
-                priors = (
-                    np.vstack(pdf["_prior"].to_numpy()).astype(np.int64)
-                    if len(pdf["_prior"].iloc[0])
-                    else None
-                )
-                for i0 in range(0, m, chunk):
-                    i1 = min(i0 + chunk, m)
-                    G = V[i0:i1] @ V.T  # exact int64 dots (|q|<=1e3, dim 64)
-                    simf = G / np.sqrt(
-                        n2[i0:i1, None].astype(np.float64) * n2[None, :].astype(np.float64)
-                    )
-                    cand = simf >= thr
-                    # strict upper triangle: id_a < id_b (rows sorted by id)
-                    cand &= np.arange(m)[None, :] > (np.arange(i0, i1)[:, None])
-                    if priors is not None:
-                        # drop pairs already emitted by an earlier table
-                        same_prior = (priors[i0:i1, None, :] == priors[None, :, :]).any(
-                            axis=2
-                        )
-                        cand &= ~same_prior
-                    ai, bj = np.nonzero(cand)
-                    if len(ai):
-                        out["id_a"].append(ids[ai + i0])
-                        out["id_b"].append(ids[bj])
-                        out["_dot"].append(G[ai, bj])
-                        out["_na"].append(n2[ai + i0])
-                        out["_nb"].append(n2[bj])
-            cat = {
-                c: (np.concatenate(v) if v else np.array([], dtype=np.int64))
-                for c, v in out.items()
-            }
-            return pd.DataFrame(cat)
-
-        found = parts.groupBy("_t", "_bk").applyInPandas(
-            kernel, schema="id_a long, id_b long, _dot long, _na long, _nb long"
-        )
-        sim = sim_of(F.col("_dot"), F.col("_na"), F.col("_nb"))
-        return (
-            found.withColumn("sim", sim)
-            .where(F.col("sim") >= threshold)  # exact decision, JVM doubles
-            .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-        )
-
-    cand = None
+    parts = None
     for k in range(len(tables)):
-        a = e.select(
-            F.col("vec_id").alias("id_a"), F.col("q").alias("qa"),
-            F.col("_n2").alias("_na"), F.col(f"_b{k}").alias("_bk"),
+        prior = (
+            F.array(*[F.col(f"_b{j}") for j in range(k)])
+            if k
+            else F.array().cast("array<int>")
         )
-        b = e.select(
-            F.col("vec_id").alias("id_b"), F.col("q").alias("qb"),
-            F.col("_n2").alias("_nb"), F.col(f"_b{k}").alias("_bk"),
+        part = e.select(
+            F.lit(k).alias("_t"),
+            F.col(f"_b{k}").cast("int").alias("_bk"),
+            "vec_id",
+            "q",
+            "_n2",
+            prior.cast("array<int>").alias("_prior"),
         )
-        p = (
-            a.join(b, "_bk")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "qa", "qb", "_na", "_nb")
-        )
-        cand = p if cand is None else cand.unionByName(p)
-    pairs = cand.dropDuplicates(["id_a", "id_b"])
-    sim = sim_of(dot_int(F.col("qa"), F.col("qb")), F.col("_na"), F.col("_nb"))
+        parts = part if parts is None else parts.unionByName(part)
+
+    # conservative float prefilter: sim is later recomputed in Spark
+    # with the exact same IEEE double ops; the 1e-9 slack only lets a
+    # handful of boundary pairs through for Spark to re-judge
+    thr = float(threshold) - 1e-9
+    chunk = 2048
+
+    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        ids = pdf["vec_id"].to_numpy()
+        m = len(ids)
+        out = {"id_a": [], "id_b": [], "_dot": [], "_na": [], "_nb": []}
+        if m >= 2:
+            V = np.vstack(pdf["q"].to_numpy()).astype(np.int64)
+            n2 = pdf["_n2"].to_numpy().astype(np.int64)
+            priors = (
+                np.vstack(pdf["_prior"].to_numpy()).astype(np.int64)
+                if len(pdf["_prior"].iloc[0])
+                else None
+            )
+            for i0 in range(0, m, chunk):
+                i1 = min(i0 + chunk, m)
+                G = V[i0:i1] @ V.T  # exact int64 dots (|q|<=1e3, dim 64)
+                simf = G / np.sqrt(
+                    n2[i0:i1, None].astype(np.float64) * n2[None, :].astype(np.float64)
+                )
+                cand = simf >= thr
+                # strict upper triangle: id_a < id_b (rows sorted by id)
+                cand &= np.arange(m)[None, :] > (np.arange(i0, i1)[:, None])
+                if priors is not None:
+                    # drop pairs already emitted by an earlier table
+                    same_prior = (priors[i0:i1, None, :] == priors[None, :, :]).any(
+                        axis=2
+                    )
+                    cand &= ~same_prior
+                ai, bj = np.nonzero(cand)
+                if len(ai):
+                    out["id_a"].append(ids[ai + i0])
+                    out["id_b"].append(ids[bj])
+                    out["_dot"].append(G[ai, bj])
+                    out["_na"].append(n2[ai + i0])
+                    out["_nb"].append(n2[bj])
+        cat = {
+            c: (np.concatenate(v) if v else np.array([], dtype=np.int64))
+            for c, v in out.items()
+        }
+        return pd.DataFrame(cat)
+
+    found = parts.groupBy("_t", "_bk").applyInPandas(
+        kernel, schema="id_a long, id_b long, _dot long, _na long, _nb long"
+    )
+    sim = F.col("_dot").cast("double") / F.sqrt(
+        F.col("_na").cast("double") * F.col("_nb").cast("double")
+    )
     return (
-        pairs.withColumn("sim", sim)
-        .where(F.col("sim") >= threshold)
+        found.withColumn("sim", sim)
+        .where(F.col("sim") >= threshold)  # exact decision, JVM doubles
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
 
@@ -556,7 +514,6 @@ def semdedup_prune(
     k: int = 8,
     iters: int = 2,
     threshold_bp: int = 4500,
-    impl: str = "gemm",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) end-to-end: k-means cluster the
     embeddings (``kmeans_clusters`` — the graded clustering stage), then
@@ -570,24 +527,25 @@ def semdedup_prune(
     The membership decision is exact integer arithmetic: with quantized
     vectors, sim >= bp/1e4  <=>  dot > 0 AND dot^2 * 1e8 >= bp^2*n2a*n2b
     — squared cross-multiplication avoids sqrt; the products exceed
-    int64 (dot^2*1e8 reaches ~4e23 at QUANT=1000, dim 64) so both sides
-    are computed in decimal(38,0), which Spark and DuckDB (hugeint)
-    evaluate exactly. No floats anywhere in any keep/drop decision.
+    int64 (dot^2*1e8 reaches ~4e23 at QUANT=1000, dim 64), so the kernel
+    below re-judges every near-boundary pair in Python ints (the DuckDB
+    oracle computes both sides in hugeint). No float ever decides a
+    boundary case.
 
     Returns per-cluster prune summary
     (cluster, n_vecs, n_dropped, sum_kept_id).
 
     Scale shape: the quadratic pair search is confined to single
     clusters — the SemDeDup design point: k grows with the corpus so the
-    expected cluster size (and the per-key join fan-out) stays bounded,
-    and the pair generation is an EQUI-join on cid (shuffle both sides
-    by cluster, never an all-pairs product). A hot (oversized) cluster
-    is visible in the k-means stage's group sizes before the join runs;
+    expected cluster size (and the per-group GEMM) stays bounded, and
+    the pair search is a group-by on cid (one shuffle by cluster, never
+    an all-pairs product). A hot (oversized) cluster is visible in the
+    k-means stage's group sizes before the pair search runs;
     split it by raising k or salt it (operators/skew.salted_join) —
     same remedy as any skewed key."""
     assignments, _ = kmeans_clusters(corpus, k=k, iters=iters)
-    # lazy persist: the assignment relation is referenced three times
-    # (both pair-join sides + the final census); without it the lazy
+    # lazy persist: the assignment relation is referenced twice (the
+    # per-cluster vectors + the final census); without it the lazy
     # kmeans sub-plan is inlined and EXECUTED once per reference
     # (measured 5.8 s -> 2.0 s at sf0.1). persist() keeps construction
     # job-free (plan-invariants builds all plans without running them);
@@ -599,106 +557,56 @@ def semdedup_prune(
         .join(vecs, "vec_id")
         .withColumn("n2", norm2_int(F.col("qe")))
     )
-    if impl == "gemm":
-        # r8 scale path (pytest-pinned equal to the join form): each
-        # cluster's pairwise dots are ONE chunked numpy GEMM inside a
-        # single applyInPandas stage, instead of a cid-equi-join whose
-        # every candidate pair carried both 512-byte quantized vectors
-        # and paid interpreted decimal(38,0) BigDecimal arithmetic
-        # (measured 82.6 s at the driver's sf1.0; the pair payload
-        # shuffle + per-pair decimal ops were ~all of it).  The keep/drop
-        # decision stays EXACT integer arithmetic: both sides of
-        # dot^2*1e8 >= bp^2*na*nb are <= ~4e23 with at most one float64
-        # rounding each when computed from exactly-representable factors
-        # (dot^2, na*nb < 2^53), so the float comparison is correct
-        # outside a 1e-6 relative band and pairs INSIDE the band are
-        # re-judged with Python arbitrary-precision ints — no float ever
-        # decides a boundary case, mirroring the decimal(38,0) contract.
-        import numpy as np
-        import pandas as pd
+    # each cluster's pairwise dots are ONE chunked numpy GEMM inside
+    # a single applyInPandas stage: no candidate pair ever carries
+    # both 512-byte quantized vectors through a shuffle.  The keep/drop
+    # decision stays EXACT integer arithmetic: both sides of
+    # dot^2*1e8 >= bp^2*na*nb are <= ~4e23 with at most one float64
+    # rounding each when computed from exactly-representable factors
+    # (dot^2, na*nb < 2^53), so the float comparison is correct
+    # outside a 1e-6 relative band and pairs INSIDE the band are
+    # re-judged with Python arbitrary-precision ints — no float ever
+    # decides a boundary case.
+    import numpy as np
+    import pandas as pd
 
-        bp2_i = threshold_bp * threshold_bp
-        chunk = 2048
+    bp2_i = threshold_bp * threshold_bp
+    chunk = 2048
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("vec_id", kind="mergesort")
-            ids = pdf["vec_id"].to_numpy()
-            m = len(ids)
-            if m < 2:
-                return pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
-            V = np.vstack(pdf["qe"].to_numpy()).astype(np.int64)
-            n2 = pdf["n2"].to_numpy().astype(np.int64)
-            n2f = n2.astype(np.float64)
-            is_dropped = np.zeros(m, dtype=bool)
-            for i0 in range(0, m, chunk):
-                i1 = min(i0 + chunk, m)
-                G = V[i0:i1] @ V.T  # exact int64 (|q|<=1e3, dim 64)
-                lhs = np.square(G.astype(np.float64)) * 1e8
-                rhs = float(bp2_i) * (n2f[i0:i1, None] * n2f[None, :])
-                upper = np.arange(m)[None, :] > np.arange(i0, i1)[:, None]
-                pos = G > 0
-                passing = (lhs >= rhs) & pos & upper
-                band = (
-                    (np.abs(lhs - rhs) <= 1e-6 * np.maximum(lhs, rhs))
-                    & pos
-                    & upper
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        ids = pdf["vec_id"].to_numpy()
+        m = len(ids)
+        if m < 2:
+            return pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
+        V = np.vstack(pdf["qe"].to_numpy()).astype(np.int64)
+        n2 = pdf["n2"].to_numpy().astype(np.int64)
+        n2f = n2.astype(np.float64)
+        is_dropped = np.zeros(m, dtype=bool)
+        for i0 in range(0, m, chunk):
+            i1 = min(i0 + chunk, m)
+            G = V[i0:i1] @ V.T  # exact int64 (|q|<=1e3, dim 64)
+            lhs = np.square(G.astype(np.float64)) * 1e8
+            rhs = float(bp2_i) * (n2f[i0:i1, None] * n2f[None, :])
+            upper = np.arange(m)[None, :] > np.arange(i0, i1)[:, None]
+            pos = G > 0
+            passing = (lhs >= rhs) & pos & upper
+            band = (
+                (np.abs(lhs - rhs) <= 1e-6 * np.maximum(lhs, rhs))
+                & pos
+                & upper
+            )
+            for ii, jj in zip(*np.nonzero(band)):
+                d = int(G[ii, jj])
+                passing[ii, jj] = (
+                    d * d * 100_000_000 >= bp2_i * int(n2[i0 + ii]) * int(n2[jj])
                 )
-                for ii, jj in zip(*np.nonzero(band)):
-                    d = int(G[ii, jj])
-                    passing[ii, jj] = (
-                        d * d * 100_000_000 >= bp2_i * int(n2[i0 + ii]) * int(n2[jj])
-                    )
-                is_dropped |= passing.any(axis=0)
-            return pd.DataFrame({"vec_id": ids[is_dropped]})
+            is_dropped |= passing.any(axis=0)
+        return pd.DataFrame({"vec_id": ids[is_dropped]})
 
-        dropped = (
-            e.groupBy("cid")
-            .applyInPandas(kernel, schema="vec_id long")
-            .withColumn("_dup", F.lit(1))
-        )
-        return (
-            assignments.join(dropped, "vec_id", "left")
-            .groupBy("cid")
-            .agg(
-                F.count(F.lit(1)).alias("n_vecs"),
-                F.sum(
-                    F.when(F.col("_dup").isNotNull(), 1).otherwise(0)
-                ).alias("n_dropped"),
-                F.sum(
-                    F.when(F.col("_dup").isNull(), F.col("vec_id")).otherwise(0)
-                ).alias("sum_kept_id"),
-            )
-            .withColumnRenamed("cid", "cluster")
-            .orderBy("cluster")
-        )
-
-    a = e.select(
-        F.col("vec_id").alias("ia"), "cid",
-        F.col("qe").alias("qa"), F.col("n2").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("ib"), "cid",
-        F.col("qe").alias("qb"), F.col("n2").alias("nb"),
-    )
-
-    def dec(c: Column) -> Column:
-        return c.cast("decimal(38,0)")
-
-    bp2 = F.lit(threshold_bp * threshold_bp).cast("decimal(38,0)")
     dropped = (
-        a.join(b, "cid")
-        .where(F.col("ia") < F.col("ib"))
-        .withColumn("dot", dot_int(F.col("qa"), F.col("qb")))
-        .where(
-            (F.col("dot") > 0)
-            & (
-                dec(F.col("dot")) * dec(F.col("dot"))
-                * F.lit(100_000_000).cast("decimal(38,0)")
-                >= bp2 * dec(F.col("na")) * dec(F.col("nb"))
-            )
-        )
-        .select(F.col("ib").alias("vec_id"))
-        .distinct()
+        e.groupBy("cid")
+        .applyInPandas(kernel, schema="vec_id long")
         .withColumn("_dup", F.lit(1))
     )
     return (

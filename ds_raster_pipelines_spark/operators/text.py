@@ -19,6 +19,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "and", "of", "to", "a", "in"]
 PUNCT_RX = r"[.,!?;:'\"()-]"
 
+# Above this many LM rows ngram_lm_scores does not collect the LM to the
+# driver for its packed-table kernel and keeps the broadcast-join form.
+MAX_LM_ROWS = 100_000
+
 
 def token_count(text: Column) -> Column:
     """Whitespace token count."""
@@ -307,15 +311,18 @@ def ngram_lm_scores(
     # per-instance gram explode (measured 1.9 s of the 2.5 s query at
     # sf1.0) never materializes.  logp values stay JVM-computed (no C
     # log()/round drift); kernel == join-path pinned by pytest.  The
-    # join form remains for n > 3 / no toolchain.
+    # join form remains for n > 3 / no toolchain / an LM above
+    # MAX_LM_ROWS (the capped collect is the same one job).
     from .. import native as _nat
 
     if n <= 3 and _nat.get_lib() is not None:
-        logp0_int = int(
-            df.sparkSession.range(1).select(logp0.alias("v")).collect()[0][0]
-        )
-        lm_pairs = [(r["g"], int(r["logp_micro"])) for r in lm.collect()]
-        return _lm_score_kernel(df, text_col, n, lm_pairs, logp0_int)
+        lm_rows = lm.limit(MAX_LM_ROWS + 1).collect()
+        if len(lm_rows) <= MAX_LM_ROWS:
+            logp0_int = int(
+                df.sparkSession.range(1).select(logp0.alias("v")).collect()[0][0]
+            )
+            lm_pairs = [(r["g"], int(r["logp_micro"])) for r in lm_rows]
+            return _lm_score_kernel(df, text_col, n, lm_pairs, logp0_int)
     scored = (
         char_ngrams(df, n, text_col)
         .join(F.broadcast(lm), "g", "left")

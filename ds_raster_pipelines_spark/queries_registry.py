@@ -3710,8 +3710,9 @@ ORDER BY id_a, id_b
 @register("embedding_near_dup", _emb_dup_oracle())
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (sim >= 0.4) via multi-table
-    sign-LSH: per-table bucket equi-joins (never a cross join), unioned
-    candidates, exact integer-quantized cosine per candidate only. The
+    sign-LSH: one integer GEMM per (table, bucket) group (never a cross
+    join), each candidate pair judged in its first colliding table only,
+    exact integer-quantized cosine per candidate only. The
     oracle replicates the bucket prefilter, so the approximate result is
     still bit-exact between engines."""
     from .operators.similarity import lsh_near_dup_pairs

@@ -64,6 +64,36 @@ def test_avi_header_frame_count_mismatch():
         avi.parse_avi(bytes(blob))
 
 
+def _walk_outcome(buf: bytes):
+    try:
+        return avi.parse_avi(buf)
+    except Exception as exc:  # compared by type and message
+        return type(exc), str(exc)
+
+
+def test_avi_native_walk_matches_python_on_truncated_strh(monkeypatch):
+    """A walkable buffer ending inside a 'vids' stream header: the Python
+    walk slices a short handler (b"DC"); the native walk must hand such a
+    buffer back to it instead of reporting an empty handler."""
+    from ds_raster_pipelines_spark import native
+
+    def chunk(fourcc: bytes, data: bytes) -> bytes:
+        return fourcc + struct.pack("<I", len(data)) + data
+
+    movi = chunk(b"LIST", b"movi" + chunk(b"00dc", b"\x01\x02"))
+    idx1 = chunk(b"idx1", b"00dc" + struct.pack("<III", 0x10, 4, 2))
+    strh = chunk(b"strh", b"vidsDC")  # 6 bytes: handler cut to 2 bytes
+    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"LIST", b"strl" + strh))
+    body = b"AVI " + movi + idx1 + hdrl
+    buf = b"RIFF" + struct.pack("<I", len(body)) + body
+
+    got = _walk_outcome(buf)
+    monkeypatch.setattr(native, "avi_scan", lambda _buf: None)
+    want = _walk_outcome(buf)
+    assert want.handler == b"DC" and want.frames == [(buf.index(b"00dc") + 8, 2)]
+    assert got == want
+
+
 def test_avi_rejects_non_avi():
     with pytest.raises(ValueError):
         avi.parse_avi(b"RIFF\x04\x00\x00\x00WAVE")

@@ -750,49 +750,141 @@ def test_semdedup_deterministic_across_parallelism(spark):
     assert outs[0] == outs[1]
 
 
-def test_lsh_near_dup_gemm_equals_join(spark):
-    """r8 parity gate: the per-bucket GEMM implementation of
-    lsh_near_dup_pairs must produce the EXACT pair set and sims the
-    r7 bucket-join + dropDuplicates plan produced (same candidates via
-    the disjoint first-colliding-table decomposition, same IEEE double
-    sim, same threshold decision)."""
-    from ds_raster_pipelines_spark.operators.similarity import lsh_near_dup_pairs
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    for thr in (0.4, 0.9):
-        a = lsh_near_dup_pairs(emb, threshold=thr, impl="gemm").orderBy(
-            "id_a", "id_b"
-        ).collect()
-        b = lsh_near_dup_pairs(emb, threshold=thr, impl="join").orderBy(
-            "id_a", "id_b"
-        ).collect()
-        assert a == b and len(a) > 0 or (a == b)
+EMB_SF001 = "/root/testdata/sf0.01/embeddings.parquet"
 
 
-def test_semdedup_gemm_equals_join(spark):
-    """r8 parity gate: semdedup_prune's per-cluster GEMM (float prefilter
-    + arbitrary-precision recheck inside the boundary band) must match
-    the decimal(38,0) join plan row-for-row — the keep/drop decision is
-    exact integer arithmetic in both."""
-    from ds_raster_pipelines_spark.operators.similarity import semdedup_prune
+def _emb_reference():
+    """(ids, raw float32 embeddings, quantized int64 matrix, int norms) of
+    the sf0.01 embeddings, quantized like ``similarity.quantize``:
+    round(x * 1000) half away from zero (Spark's HALF_UP round). x*1000
+    of a float32 is exact in float64, so the +0.5 floor is exact too."""
+    import numpy as np
+    import pyarrow.parquet as pq
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    for bp in (4500, 9000):
-        a = semdedup_prune(emb, threshold_bp=bp, impl="gemm").collect()
-        b = semdedup_prune(emb, threshold_bp=bp, impl="join").collect()
-        assert a == b and len(a) > 0
+    t = pq.read_table(EMB_SF001, columns=["vec_id", "embedding"]).to_pandas()
+    t = t.sort_values("vec_id", kind="mergesort")
+    raw = np.vstack(t["embedding"].to_numpy())
+    v = raw.astype(np.float64) * 1000
+    E = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype(np.int64)
+    return t["vec_id"].to_numpy(np.int64), raw, E, (E * E).sum(axis=1)
 
 
-def test_cosine_topk_gemm_equals_join(spark):
-    """r8 parity gate: the broadcast-GEMM cosine_topk equals the
-    CartesianProduct baseline row-for-row (same integer dots, same IEEE
-    sim, same (-sim, nid) comparator for partition-local top-k)."""
-    from pyspark.sql import functions as F
+def _round6(x: float) -> float:
+    """Spark's round(x, 6) on a double: HALF_UP over its decimal string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _sims(G, na, nb):
+    """The engine's IEEE expression dot / sqrt(na * nb) over int inputs."""
+    import numpy as np
+
+    return G.astype(np.float64) / np.sqrt(
+        na[:, None].astype(np.float64) * nb[None, :].astype(np.float64)
+    )
+
+
+def test_cosine_topk_matches_numpy_reference(spark):
+    """cosine_topk for 50 queries == exact int dots, the same IEEE sim,
+    (-sim, nid) order, self excluded, top 5 per query."""
+    import numpy as np
 
     from ds_raster_pipelines_spark.operators.similarity import cosine_topk
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 50)
-    a = cosine_topk(q, emb, k=5, impl="gemm").orderBy("qid", "rank").collect()
-    b = cosine_topk(q, emb, k=5, impl="join").orderBy("qid", "rank").collect()
-    assert a == b and len(a) == 250
+    ids, _, E, n2 = _emb_reference()
+    qsel = ids < 50
+    sim = _sims(E[qsel] @ E.T, n2[qsel], n2)
+    want = []
+    for qi, qid in enumerate(ids[qsel]):
+        cand = np.nonzero(ids != qid)[0]
+        order = cand[np.lexsort((ids[cand], -sim[qi, cand]))][:5]
+        want += [
+            (int(qid), int(ids[j]), r + 1, _round6(sim[qi, j]))
+            for r, j in enumerate(order)
+        ]
+
+    emb = spark.read.parquet(EMB_SF001)
+    got = cosine_topk(emb.where(F.col("vec_id") < 50), emb, k=5).orderBy("qid", "rank")
+    assert [tuple(r) for r in got.collect()] == want and len(want) == 250
+
+
+def test_cosine_topk_zero_queries_empty_without_cartesian(spark):
+    from ds_raster_pipelines_spark.operators.similarity import cosine_topk
+
+    emb = spark.read.parquet(EMB_SF001)
+    out = cosine_topk(emb.where(F.col("vec_id") < 0), emb, k=5)
+    assert out.columns == ["qid", "nid", "rank", "sim"]
+    assert out.collect() == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
+
+
+def test_lsh_near_dup_matches_numpy_reference(spark):
+    """lsh_near_dup_pairs == every id_a < id_b pair whose sign-bit
+    buckets over LSH_TABLES match in ANY table and whose IEEE sim clears
+    the threshold."""
+    import numpy as np
+
+    from ds_raster_pipelines_spark.operators.similarity import (
+        LSH_TABLES,
+        lsh_near_dup_pairs,
+    )
+
+    ids, raw, E, n2 = _emb_reference()
+    same_bucket = np.zeros((len(ids), len(ids)), dtype=bool)
+    for dims in LSH_TABLES:
+        bucket = sum((raw[:, d - 1] >= 0).astype(np.int64) << i for i, d in enumerate(dims))
+        same_bucket |= bucket[:, None] == bucket[None, :]
+    sim = _sims(E @ E.T, n2, n2)
+    upper = ids[:, None] < ids[None, :]
+    emb = spark.read.parquet(EMB_SF001)
+    n_pairs = {}
+    for thr in (0.4, 0.9):
+        ai, bj = np.nonzero(same_bucket & upper & (sim >= thr))
+        want = sorted(
+            (int(ids[a]), int(ids[b]), _round6(sim[a, b])) for a, b in zip(ai, bj)
+        )
+        got = lsh_near_dup_pairs(emb, threshold=thr).orderBy("id_a", "id_b").collect()
+        assert [tuple(r) for r in got] == want, thr
+        n_pairs[thr] = len(want)
+    assert n_pairs[0.4] > 0
+
+
+def test_semdedup_matches_python_int_reference(spark):
+    """semdedup_prune == keep-first over kmeans_clusters' assignments: a
+    vector is dropped iff a lower-id vector of its cluster has dot > 0
+    and dot^2 * 1e8 >= bp^2 * na * nb in Python ints."""
+    import numpy as np
+
+    from ds_raster_pipelines_spark.operators.similarity import (
+        kmeans_clusters,
+        semdedup_prune,
+    )
+
+    ids, _, E, n2 = _emb_reference()
+    row = {int(v): i for i, v in enumerate(ids)}
+    emb = spark.read.parquet(EMB_SF001)
+    assign, _ = kmeans_clusters(emb)
+    members: dict[int, list[int]] = {}
+    for r in assign.collect():
+        members.setdefault(int(r["cid"]), []).append(int(r["vec_id"]))
+    n_dropped = {}
+    for bp in (4500, 9000):
+        want = []
+        for cid in sorted(members):
+            vids = sorted(members[cid])
+            rows = [row[v] for v in vids]
+            G = E[rows] @ E[rows].T
+            dropped = set()
+            for a, b in zip(*np.nonzero(np.triu(G > 0, 1))):
+                d = int(G[a, b])
+                na, nb = int(n2[rows[a]]), int(n2[rows[b]])
+                if d * d * 100_000_000 >= bp * bp * na * nb:
+                    dropped.add(vids[b])
+            kept = sum(v for v in vids if v not in dropped)
+            want.append((cid, len(vids), len(dropped), kept))
+        got = [tuple(r) for r in semdedup_prune(emb, threshold_bp=bp).collect()]
+        assert got == want, bp
+        n_dropped[bp] = sum(w[2] for w in want)
+    assert n_dropped[4500] > 0

@@ -212,9 +212,8 @@ def test_pip_distributed_parity_non_rect(spark, monkeypatch):
 def test_pip_boundary_semantics_consistent_on_edges(spark, monkeypatch):
     """VERDICT r4 item 9: points exactly ON polygon edges must classify
     IDENTICALLY under every refine mode (bbox fast path, indexed ray
-    cast, distributed per-row-WKB) for each documented boundary
-    convention — half_open (left/bottom in, right/top out) and closed
-    (every edge point in)."""
+    cast, distributed per-row-WKB) under the half-open rule: left/bottom
+    edges in, right/top edges out."""
     import pandas as pd
 
     from ds_raster_pipelines_spark.operators import pip
@@ -239,28 +238,14 @@ def test_pip_boundary_semantics_consistent_on_edges(spark, monkeypatch):
         }
     )
     pts = spark.createDataFrame(probes)
-    expected = {
-        # half_open: [min_lon, max_lon) x [min_lat, max_lat)
-        "half_open": {0, 2, 4, 6},
-        # closed: every on-edge probe is inside
-        "closed": {0, 2, 3, 4, 5, 6, 7, 8, 9},
-    }
+    # half-open: [min_lon, max_lon) x [min_lat, max_lat)
+    want = {0, 2, 4, 6}
 
-    for boundary, want in expected.items():
-        results = {}
-        for mode in ("bbox", "wkb"):
-            got = (
-                pip.pip_join(pts, adm, res=4, refine=mode, boundary=boundary)
-                .select("i").toPandas()["i"]
-            )
-            results[mode] = set(got.tolist())
-        with monkeypatch.context() as mp:
-            mp.setattr(pip, "MAX_LOCAL_POLYGONS", 0)
-            got = (
-                pip.pip_join(pts, adm, res=4, refine="wkb", boundary=boundary)
-                .select("i").toPandas()["i"]
-            )
-            results["distributed"] = set(got.tolist())
-        assert results["bbox"] == results["wkb"] == results["distributed"] == want, (
-            boundary, results,
-        )
+    results = {}
+    for mode in ("bbox", "wkb"):
+        got = pip.pip_join(pts, adm, res=4, refine=mode).select("i").toPandas()["i"]
+        results[mode] = set(got.tolist())
+    monkeypatch.setattr(pip, "MAX_LOCAL_POLYGONS", 0)
+    got = pip.pip_join(pts, adm, res=4, refine="wkb").select("i").toPandas()["i"]
+    results["distributed"] = set(got.tolist())
+    assert results["bbox"] == results["wkb"] == results["distributed"] == want, results

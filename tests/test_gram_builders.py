@@ -213,3 +213,23 @@ def test_lm_score_kernel_matches_join(docs):
         assert _sorted(ngram_lm_scores(docs)) == expect
     finally:
         native._lib = saved
+
+
+def test_lm_scores_above_row_cap_use_join_form(docs, monkeypatch):
+    """An LM above MAX_LM_ROWS is not collected for the packed-table
+    kernel: ngram_lm_scores keeps the broadcast-join form, and the rows
+    equal the kernel path's."""
+    from ds_raster_pipelines_spark import native
+    from ds_raster_pipelines_spark.operators import text
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    kernel = text.ngram_lm_scores(docs)
+    want = _sorted(kernel)
+    monkeypatch.setattr(text, "MAX_LM_ROWS", 1)
+    capped = text.ngram_lm_scores(docs)
+    assert _sorted(capped) == want and len(want) > 0
+    assert "MapInArrow" not in plan(capped)
+    if native.get_lib() is not None:
+        assert "MapInArrow" in plan(kernel)

@@ -3,7 +3,7 @@
 The reference's real consumption input is admin shapefiles
 (``examples/era5_cogs.md:164-172``) — routinely MultiPolygons with holes.
 These tests pin WKB parse fidelity, even-odd parity classification across
-interior rings, BOTH on-edge conventions on hole edges, the interior-cell
+interior rings, the half-open on-edge rule on hole edges, the interior-cell
 ('full') shortcut's hole-awareness, and engine-vs-naive-oracle agreement
 on the holed fixture corpus.
 """
@@ -54,10 +54,8 @@ def test_parse_wkb_polygon_rejects_holes_and_multiparts():
     assert ring.shape == (5, 2)
 
 
-def _cls(lon, lat, rings, boundary="half_open"):
-    return _points_in_rings(
-        np.asarray([lon], float), np.asarray([lat], float), rings, boundary
-    )[0]
+def _cls(lon, lat, rings):
+    return _points_in_rings(np.asarray([lon], float), np.asarray([lat], float), rings)[0]
 
 
 RINGS_HOLED = [np.asarray(OUTER, float), np.asarray(HOLE, float)]
@@ -87,12 +85,6 @@ def test_hole_edge_half_open_mirrors():
     # outer ring unchanged by the hole
     assert _cls(0.0, 5.0, RINGS_HOLED)  # outer left edge in
     assert not _cls(10.0, 5.0, RINGS_HOLED)  # outer right edge out
-
-
-def test_hole_edge_closed_everything_on_boundary_inside():
-    for lon, lat in [(4.0, 5.0), (5.0, 4.0), (6.0, 5.0), (5.0, 6.0),
-                     (4.0, 4.0), (6.0, 6.0), (10.0, 5.0), (20.0, 21.0)]:
-        assert _cls(lon, lat, RINGS_MULTI, "closed"), (lon, lat)
 
 
 def test_cover_full_flag_hole_aware():
@@ -160,11 +152,6 @@ def test_pip_join_holed_half_open(spark, holed_points, multi_admin):
     assert _pids(out) == ["hole_top_edge", "in_outer", "in_part2"]
 
 
-def test_pip_join_holed_closed(spark, holed_points, multi_admin):
-    out = pip_join(holed_points, multi_admin, res=5, refine="wkb", boundary="closed")
-    assert _pids(out) == ["hole_left_edge", "hole_top_edge", "in_outer", "in_part2"]
-
-
 def test_pip_join_distributed_holed_matches(spark, holed_points, multi_admin):
     out = pip_join_distributed(holed_points, multi_admin, res=5)
     assert _pids(out) == ["hole_top_edge", "in_outer", "in_part2"]
@@ -173,7 +160,7 @@ def test_pip_join_distributed_holed_matches(spark, holed_points, multi_admin):
 def test_contains_wkb_udf_holed(spark, holed_points):
     import pyspark.sql.functions as F
 
-    udf = contains_wkb_udf("half_open")
+    udf = contains_wkb_udf()
     df = holed_points.withColumn("wkb", F.lit(WKB_MULTI))
     got = {
         r["pid"]: r["inside"]
